@@ -33,7 +33,12 @@ import org.apache.spark.sql.types.StructType
   *    are idempotent under micro-batch replay, so the composition is
   *    exactly-once end to end.
   *
-  * Two checkpointed queries share the source (the dashboard pattern):
+  * Two checkpointed queries share the source (the dashboard pattern)
+  * and run concurrently, as the two branches of one Flink job graph
+  * do. Each keeps its own checkpoint (`<checkpoint>/corpus`,
+  * `<checkpoint>/funnel`) and its own restart budget; if one runs out
+  * of restarts, the other is stopped and awaited before the failure
+  * is rethrown, so no query outlives [[run]]:
   *
   *  1. "corpus": flags → gate filter → redact → per-batch collapse to
   *     one min-doc_id row per content hash → insert-if-absent into
@@ -56,11 +61,12 @@ object IngestPipeline {
 
   /** Run both queries over `sourceDir` (schema = the documents table:
     * doc_id, text, lang, source, n_chars) until no files remain
-    * (AvailableNow), with up to `maxRestarts` fixed-delay restarts
-    * each. Corpus docs are stored under their content hash with
-    * fields (doc_id, source, red_text, n_tokens); funnel counters
-    * under the source name as "n_raw|n_quality|n_gated". Returns
-    * restarts used. */
+    * (AvailableNow), concurrently, with up to `maxRestarts`
+    * fixed-delay restarts each. Corpus docs are stored under their
+    * content hash with fields (doc_id, source, red_text, n_tokens);
+    * funnel counters under the source name as
+    * "n_raw|n_quality|n_gated". Returns restarts used, summed over
+    * both queries. */
   def run(spark: SparkSession, sourceDir: String, schema: StructType,
           corpus: DocStore, funnel: KvStore, checkpoint: String,
           maxRestarts: Int = 3, restartDelayMs: Long = 1000): Int = {
@@ -104,23 +110,19 @@ object IngestPipeline {
         .agg(count(lit(1)).as("n_raw"), sum(col("q_ok")).as("n_quality"),
           sum(col("q_ok") * col("l_ok")).as("n_gated"))
 
-    val r1 = Restarts.fixedDelay(maxRestarts, restartDelayMs) { () =>
-      admitted.writeStream
+    Restarts.fixedDelay(maxRestarts, restartDelayMs)(
+      () => admitted.writeStream
         .option("checkpointLocation", s"$checkpoint/corpus")
         .outputMode(OutputMode.Append)
         .foreachBatch(corpusWriter _)
         .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    val r2 = Restarts.fixedDelay(maxRestarts, restartDelayMs) { () =>
-      funnelCounts.writeStream
+        .start(),
+      () => funnelCounts.writeStream
         .option("checkpointLocation", s"$checkpoint/funnel")
         .outputMode(OutputMode.Complete)
         .foreachBatch(Sinks.mergeUpsertWriter(funnel, Seq("source"),
           Seq("n_raw", "n_quality", "n_gated")))
         .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    r1 + r2
+        .start())
   }
 }

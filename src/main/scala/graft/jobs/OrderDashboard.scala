@@ -23,8 +23,12 @@ import org.apache.spark.sql.types.StructType
   *    GroupDataFuc) — watermarked daily windows, integer money;
   *  - sink: [[Sinks.mergeUpsertWriter]] — idempotent upsert, so
   *    checkpointed replay is exactly-once;
-  *  - resilience: [[Restarts.fixedDelay]] around each checkpointed
-  *    query (the reference's RestartStrategies).
+  *  - resilience: [[Restarts.fixedDelay]] runs the two checkpointed
+  *    queries concurrently, as the reference's two branches of one
+  *    job graph run, each with its own restart budget (the
+  *    reference's RestartStrategies). If one runs out of restarts,
+  *    the other is stopped and awaited before the failure is
+  *    rethrown, so no query outlives the call.
   *
   * At 100 TB/day: the only shuffles are the two aggregations (keys =
   * days and days × provinces — tiny); state is bounded by the
@@ -39,26 +43,9 @@ object OrderDashboard {
   def run(spark: SparkSession, sourceDir: String, schema: StructType,
           store: KvStore, checkpoint: String,
           watermarkDelay: String = "1 day",
-          maxRestarts: Int = 3, restartDelayMs: Long = 1000): Int = {
-    def orders: DataFrame = Readers.fileStream(spark, sourceDir, schema)
-    def startQuery(df: DataFrame, keys: Seq[String], ckSubdir: String) =
-      df.writeStream
-        .option("checkpointLocation", s"$checkpoint/$ckSubdir")
-        .outputMode(OutputMode.Update)
-        .foreachBatch(Sinks.mergeUpsertWriter(store, keys,
-          Seq("total_num", "total_money_e2")))
-        .trigger(Trigger.AvailableNow())
-        .start()
-    val r1 = Restarts.fixedDelay(maxRestarts, restartDelayMs) { () =>
-      startQuery(StreamingJobs.orderTotals(orders, watermarkDelay),
-        Seq("order_day"), "totals")
-    }
-    val r2 = Restarts.fixedDelay(maxRestarts, restartDelayMs) { () =>
-      startQuery(StreamingJobs.orderDashboard(orders, watermarkDelay),
-        Seq("order_day", "province"), "province")
-    }
-    r1 + r2
-  }
+          maxRestarts: Int = 3, restartDelayMs: Long = 1000): Int =
+    drain(Readers.fileStream(spark, sourceDir, schema), store, checkpoint,
+      watermarkDelay, maxRestarts, restartDelayMs)
 
   /** The same dashboard fed by the GENERATED order stream — the
     * reference's own topology (custom `SourceFunction` → windowed
@@ -72,9 +59,16 @@ object OrderDashboard {
           maxOrders: Long = graft.sources.OrderGen.DefaultMaxOrders,
           rowsPerBatch: Long = 500L,
           watermarkDelay: String = "1 day",
-          maxRestarts: Int = 3, restartDelayMs: Long = 1000): Int = {
-    def orders: DataFrame =
-      Readers.orderStream(spark, maxOrders, rowsPerBatch)
+          maxRestarts: Int = 3, restartDelayMs: Long = 1000): Int =
+    drain(Readers.orderStream(spark, maxOrders, rowsPerBatch), store,
+      checkpoint, watermarkDelay, maxRestarts, restartDelayMs)
+
+  /** Both dashboard queries over `orders` (rebuilt on every restart),
+    * run concurrently: site-wide totals checkpointed under
+    * `<checkpoint>/totals`, per-province totals under
+    * `<checkpoint>/province`. */
+  private def drain(orders: => DataFrame, store: KvStore, checkpoint: String,
+      watermarkDelay: String, maxRestarts: Int, restartDelayMs: Long): Int = {
     def startQuery(df: DataFrame, keys: Seq[String], ckSubdir: String) =
       df.writeStream
         .option("checkpointLocation", s"$checkpoint/$ckSubdir")
@@ -83,14 +77,10 @@ object OrderDashboard {
           Seq("total_num", "total_money_e2")))
         .trigger(Trigger.AvailableNow())
         .start()
-    val r1 = Restarts.fixedDelay(maxRestarts, restartDelayMs) { () =>
-      startQuery(StreamingJobs.orderTotals(orders, watermarkDelay),
-        Seq("order_day"), "totals")
-    }
-    val r2 = Restarts.fixedDelay(maxRestarts, restartDelayMs) { () =>
-      startQuery(StreamingJobs.orderDashboard(orders, watermarkDelay),
-        Seq("order_day", "province"), "province")
-    }
-    r1 + r2
+    Restarts.fixedDelay(maxRestarts, restartDelayMs)(
+      () => startQuery(StreamingJobs.orderTotals(orders, watermarkDelay),
+        Seq("order_day"), "totals"),
+      () => startQuery(StreamingJobs.orderDashboard(orders, watermarkDelay),
+        Seq("order_day", "province"), "province"))
   }
 }

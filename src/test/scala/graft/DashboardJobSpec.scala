@@ -21,7 +21,7 @@ class DashboardJobSpec extends SparkTestBase {
       .toDF("ts", "province", "amount").write.mode("append").parquet(src)
     val schema = spark.read.parquet(src).schema
 
-    assert(OrderDashboard.run(spark, src, schema, store, ck) == 0) // no restarts needed
+    assert(noQueryOutlives(OrderDashboard.run(spark, src, schema, store, ck)) == 0) // no restarts needed
     // per-province totals (reference GroupDataFuc)
     assert(store.get("1970-01-01 00:00:00.0|zhejiang").contains("1|1050"))
     assert(store.get("1970-01-01 00:00:00.0|shanghai").contains("1|200"))
@@ -31,7 +31,7 @@ class DashboardJobSpec extends SparkTestBase {
     // new orders land; a re-run processes ONLY them and upserts totals
     Seq((t(300), "zhejiang", 1.0))
       .toDF("ts", "province", "amount").write.mode("append").parquet(src)
-    OrderDashboard.run(spark, src, schema, store, ck)
+    noQueryOutlives(OrderDashboard.run(spark, src, schema, store, ck))
     assert(store.get("1970-01-01 00:00:00.0|zhejiang").contains("2|1150"))
     assert(store.get("1970-01-01 00:00:00.0|shanghai").contains("1|200"))
     assert(store.get("1970-01-01 00:00:00.0").contains("3|1350"))
@@ -50,8 +50,8 @@ class DashboardJobSpec extends SparkTestBase {
     val n = 1000L
     // rowsPerBatch 300 < n forces a multi-batch AvailableNow drain —
     // the admission-control path, not a single-batch special case
-    assert(OrderDashboard.runGenerated(spark, store, ck,
-      maxOrders = n, rowsPerBatch = 300L) == 0)
+    assert(noQueryOutlives(OrderDashboard.runGenerated(spark, store, ck,
+      maxOrders = n, rowsPerBatch = 300L)) == 0)
 
     val batch = OrderGen.frame(spark, n)
     val wantProv = batch
@@ -78,8 +78,8 @@ class DashboardJobSpec extends SparkTestBase {
 
     // replay idempotence: a fresh run over the SAME checkpoint adds
     // nothing (the source is fully drained and replay-stable)
-    assert(OrderDashboard.runGenerated(spark, store, ck,
-      maxOrders = n, rowsPerBatch = 300L) == 0)
+    assert(noQueryOutlives(OrderDashboard.runGenerated(spark, store, ck,
+      maxOrders = n, rowsPerBatch = 300L)) == 0)
     for ((k, v) <- wantTotal)
       assert(store.get(k).contains(v), s"replay must not double-count $k")
     StoreRegistry.clear("gendash")

@@ -34,7 +34,7 @@ class IngestJobSpec extends SparkTestBase {
     // the batch min-doc_id keeper rule under ordered arrival)
     docs.filter($"doc_id" < cut).coalesce(1)
       .write.mode("append").parquet(src)
-    assert(IngestPipeline.run(spark, src, schema, corpus, funnel, ck) == 0)
+    assert(noQueryOutlives(IngestPipeline.run(spark, src, schema, corpus, funnel, ck)) == 0)
     val partialRaw = funnel.get(
       docs.select($"source").distinct().as[String].collect().sorted.head)
     assert(partialRaw.isDefined, "first drop must land funnel counters")
@@ -42,7 +42,7 @@ class IngestJobSpec extends SparkTestBase {
     // drop 2: the rest; the resumed run must process ONLY the new file
     docs.filter($"doc_id" >= cut).coalesce(1)
       .write.mode("append").parquet(src)
-    assert(IngestPipeline.run(spark, src, schema, corpus, funnel, ck) == 0)
+    assert(noQueryOutlives(IngestPipeline.run(spark, src, schema, corpus, funnel, ck)) == 0)
 
     // parity: live funnel counters ≡ the batch q_funnel stage counts
     val want = SparkEntry.queries("q_funnel")(spark, sf)
@@ -109,7 +109,7 @@ class IngestJobSpec extends SparkTestBase {
       .coalesce(1).write.mode("append").parquet(src)
     val schema = spark.read.parquet(src).schema
 
-    assert(IngestPipeline.run(spark, src, schema, corpus, funnel, ck) == 0)
+    assert(noQueryOutlives(IngestPipeline.run(spark, src, schema, corpus, funnel, ck)) == 0)
     assert(funnel.get("web").contains("3|2|2"))
     assert(funnel.get("mail").contains("1|1|1"))
     assert(corpus.size == 2, "doc 2 gated out, doc 4 deduped away")
@@ -123,7 +123,7 @@ class IngestJobSpec extends SparkTestBase {
     // replay: wipe the checkpoint so the SAME files reprocess — the
     // idempotent sinks must land the identical store state
     val ck2 = tmpDir("ingck2b")
-    assert(IngestPipeline.run(spark, src, schema, corpus, funnel, ck2) == 0)
+    assert(noQueryOutlives(IngestPipeline.run(spark, src, schema, corpus, funnel, ck2)) == 0)
     assert(corpus.size == 2 && funnel.get("web").contains("3|2|2"))
     assert(corpus.get(hGood).exists(_("doc_id") == "1"))
 

@@ -13,6 +13,15 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   /** Fresh temp dir per call. */
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Runs a streaming job and checks that none of its queries is
+    * still active once it has returned. */
+  def noQueryOutlives[T](job: => T): T = {
+    val result = job
+    assert(spark.streams.active.isEmpty,
+      s"queries outlived the job: ${spark.streams.active.map(_.id).mkString(", ")}")
+    result
+  }
 }
 
 object SparkTestBase {
